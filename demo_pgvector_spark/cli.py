@@ -13,17 +13,38 @@ This module exposes the same three verbs with the same parameters and
 defaults, so switching is a drop-in: Postgres+pgvector becomes a
 directory of the four engine tables (models / sources / source_chunks /
 source_chunk_data) stored as versioned parquet with atomic pointer
-commits (streaming/ingest.py machinery — a crash mid-import leaves the
-previous state visible, the job-level analog of the reference's
-transaction). ``generate_text`` is deterministic up to the byte-exact
-prompt; token sampling itself is the pluggable external LLM sink
-(interfaces.LLMClient), exactly as SURVEY §2.4 scopes it.
+commits (streaming/ingest.py machinery). ``generate_text`` is
+deterministic up to the byte-exact prompt; token sampling itself is the
+pluggable external LLM sink (interfaces.LLMClient), exactly as SURVEY
+§2.4 scopes it.
+
+Two ways to commit:
+
+- ``import_doc`` commits each table as an ADD-FILE delta: the next
+  version hardlinks the previous version's files and appends only the
+  rows the import adds, so an import writes O(import), not
+  O(warehouse). The files accrete; ``maintain`` compacts them.
+- ``save_state`` commits whole frames as full versions.
+
+Crash semantics: each table commit is atomic (one pointer swap), the
+four are not. A crash between them leaves the earlier tables at their
+new version; rerunning the import repairs it, because the dimension
+upserts are idempotent and chunk ids are allocated above the largest
+committed ``chunks`` id. That is why ``chunks`` commits before
+``chunk_data``: a ``chunks`` row orphaned by a crash has no payload,
+so a search never returns it (at worst it takes one of the k slots),
+and the retry's ids lie above it. The other order would leave payload
+rows whose ids the retry hands out again, pairing one chunk with two
+texts.
 
 Real files in, real answers out: ``.epub`` goes through the stdlib
-EPUB→text parser (operators/convert.py, no pandoc needed), ``.txt`` /
-``.md`` are read as UTF-8 text, and ``<file>.meta.yml`` sidecars are
-picked up automatically when present — the same corpus layout as the
-reference's examples/ directory.
+EPUB→text parser (operators/convert.py, no pandoc needed), ``.txt`` is
+read as UTF-8 text, and ``<file>.meta.yml`` sidecars are picked up
+automatically when present — the same corpus layout as the reference's
+examples/ directory. Other files are read as text too but routed out
+before the import, as the reference drops them: ``.md`` is
+``text/markdown``, neither plain text nor convertible
+(operators/ingest.py; the ``src_route`` oracle pins it).
 """
 
 from __future__ import annotations
@@ -32,10 +53,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from demo_pgvector_spark import interfaces, pipeline
 from demo_pgvector_spark import tables as t
 from demo_pgvector_spark.operators import convert
+from demo_pgvector_spark.session import local_frame, scoped_conf
 from demo_pgvector_spark.streaming import ingest
 
 DEFAULT_MODEL = pipeline.DEFAULT_MODEL_NAME
@@ -58,17 +81,29 @@ def load_state(spark: SparkSession, warehouse: str) -> dict[str, DataFrame]:
 
 
 def save_state(state: dict[str, DataFrame], warehouse: str) -> None:
-    """Commit every table as a new version behind its pointer. Tables
-    commit independently; the import recomputes from committed inputs,
-    so a crash between table commits is repaired by rerunning the
-    (idempotent) import."""
+    """The full-version commit: write every table's whole frame as a new
+    version behind its pointer, in the order ``import_doc`` commits."""
     for name in _TABLE_SCHEMAS:
         ingest.commit_table(state[name], os.path.join(warehouse, name))
 
 
+def _as_stored(spark: SparkSession, rows: DataFrame, schema: StructType) -> DataFrame:
+    """``rows`` with the nullability a table's files are written with:
+    that of ``schema`` ∪ ``rows``, as a full-version commit over an empty
+    table writes them. Parquet files take the nullability of the plan
+    that writes them, after optimization, so the stored schema is put
+    on a union side the optimizer cannot prune: a zero-partition frame,
+    which runs no task. A delta that is empty at run time (a re-import
+    adds no model) then writes that schema too, and every file of a
+    version agrees."""
+    stored = local_frame(spark, [], schema).unionByName(rows).schema
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), stored)
+    return empty.unionByName(rows)
+
+
 def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
     """(doc_id, filepath, text) from real local files: EPUB via the
-    stdlib container parse, txt/md as UTF-8. Per-file work parallelizes
+    stdlib container parse, anything else as UTF-8. Per-file work parallelizes
     across the binaryFile scan; doc_id is the content-independent path
     hash (stable across re-imports)."""
     epubs = [f for f in files if f.lower().endswith(".epub")]
@@ -111,33 +146,47 @@ def import_doc(
 ) -> dict[str, DataFrame]:
     """``inv import.doc-file`` / cli/import_doc.py: convert each file,
     join its ``.meta.yml`` sidecar when present, upsert the model and
-    source dimensions, chunk, embed, append — then commit.
-    ``tokenizer="bpe"`` budgets chunks by real learned BPE token counts
-    (the reference's tokenizer-driven chunker shape)."""
+    source dimensions, chunk, embed, append — then commit each table's
+    new rows as an add-file delta and return the state re-read from the
+    warehouse. ``tokenizer="bpe"`` budgets chunks by real learned BPE
+    token counts (the reference's tokenizer-driven chunker shape).
+
+    The four commits share one pass over the lineage: the converted
+    files and the embedded chunk batch both chunk tables are allocated
+    from are persisted for the commits and released before returning,
+    so parsing, chunking and embedding run once per import."""
     if not files:
         return load_state(spark, warehouse)
-    frame = _read_files(spark, files)
-    side_paths = [f + ".meta.yml" for f in files if os.path.exists(f + ".meta.yml")]
-    sidecars = (
-        convert.read_sidecar_yaml(spark, side_paths)
-        if side_paths
-        else spark.createDataFrame(
-            [],
-            "filepath string, author string, title string, text_type string,"
-            " genre string, publication_date string",
+    frame = _read_files(spark, files).persist()
+    cached = [frame]
+    try:
+        side_paths = [f + ".meta.yml" for f in files if os.path.exists(f + ".meta.yml")]
+        novel = pipeline.import_documents(
+            spark,
+            frame,
+            convert.read_sidecar_yaml(spark, side_paths),
+            load_state(spark, warehouse),
+            model_name=model,
+            max_tokens=max_tokens,
+            tokenizer=tokenizer,
         )
-    )
-    state = pipeline.import_documents(
-        spark,
-        frame,
-        sidecars,
-        load_state(spark, warehouse),
-        model_name=model,
-        max_tokens=max_tokens,
-        tokenizer=tokenizer,
-    )
-    save_state(state, warehouse)
-    return state
+        # let the cached plan keep AQE's partition coalescing: the batch
+        # sits behind a shuffle, and at its full shuffle width the
+        # embedding UDF runs one Python task per (mostly empty) partition
+        with scoped_conf(
+            spark, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        ):
+            cached.append(novel["chunk_batch"].persist())
+        for name, schema in _TABLE_SCHEMAS.items():
+            ingest.commit_table(
+                _as_stored(spark, novel[name], schema),
+                os.path.join(warehouse, name),
+                delta=True,
+            )
+    finally:
+        for df in cached:
+            df.unpersist()
+    return load_state(spark, warehouse)
 
 
 def search_doc_chunks(

@@ -37,8 +37,10 @@ class EmbeddingGenerator(Protocol):
 
 @runtime_checkable
 class EmbeddingIngestor(Protocol):
-    """Bulk ingest: documents in, updated engine tables out — the
-    set-oriented ``bulk_ingest`` the reference planned (:29-33)."""
+    """Bulk ingest: documents in, the rows they add to each engine table
+    out — the set-oriented ``bulk_ingest`` the reference planned
+    (:29-33). The updated table is ``state[t].unionByName(out[t])``; an
+    add-file commit writes ``out[t]`` alone."""
 
     def __call__(
         self,

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demo_pgvector_spark.session import local_frame
+
 N_CHAPTERS = 2
 
 
@@ -249,7 +251,8 @@ def read_sidecar_yaml(spark, paths: list[str]) -> DataFrame:
                 str(meta.get("publication_date", "")) or None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "filepath string, author string, title string, text_type string,"
         " genre string, publication_date string",

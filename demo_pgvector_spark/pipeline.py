@@ -13,10 +13,12 @@ with a DB round-trip each, cli/import_doc.py:48-73).
     chunk + enrich → hash-embed each chunk → two-table chunk append
 
 Every stage is one of the tested operators; this module only wires
-them. All tables are plain DataFrames in and out — callers persist with
-``convert.write_partitioned`` (or any sink) between runs. Re-running an
-import of the same corpus is a no-op for the dimension tables
-(anti-join upserts) — proven in tests/test_pipeline_e2e.py.
+them. All tables are plain DataFrames in and out. ``import_documents``
+returns only the rows the import ADDS to each table, which is what an
+add-file commit writes (cli.import_doc); a caller that needs a full
+table unions them with the state it passed in. Re-running an import of
+the same corpus adds no dimension rows (anti-join upserts) — proven in
+tests/test_pipeline_e2e.py.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from demo_pgvector_spark.functions import embedding as emb_fns
 from demo_pgvector_spark.functions import text as text_fns
 from demo_pgvector_spark.operators import chunking, ingest, rag, write
 from demo_pgvector_spark.operators.similarity import sim_topk
+from demo_pgvector_spark.session import local_frame
 
 DEFAULT_MODEL_NAME = chunking.DEFAULT_TOKENIZER_MODEL
 EMBEDDING_DIM = 64  # testdata dim; the reference default is 1536
@@ -38,12 +41,10 @@ def empty_tables(spark: SparkSession) -> dict[str, DataFrame]:
     from demo_pgvector_spark import tables as t
 
     return {
-        "models": spark.createDataFrame([], t.MODELS_SCHEMA),
-        "sources": spark.createDataFrame([], t.SOURCES_SCHEMA),
-        "chunks": spark.createDataFrame([], t.SOURCE_CHUNKS_SCHEMA),
-        "chunk_data": spark.createDataFrame(
-            [], t.SOURCE_CHUNK_DATA_SCHEMA
-        ),
+        "models": local_frame(spark, [], t.MODELS_SCHEMA),
+        "sources": local_frame(spark, [], t.SOURCES_SCHEMA),
+        "chunks": local_frame(spark, [], t.SOURCE_CHUNKS_SCHEMA),
+        "chunk_data": local_frame(spark, [], t.SOURCE_CHUNK_DATA_SCHEMA),
     }
 
 
@@ -58,7 +59,11 @@ def import_documents(
 ) -> dict[str, DataFrame]:
     """Batch import. ``files``: (doc_id, filepath, text); ``sidecars``:
     (filepath, author, title, genre, text_type, publication_date) — the
-    ``*.meta.yml`` analog. Returns the four updated tables.
+    ``*.meta.yml`` analog. Returns, per engine table, the rows the import
+    adds to ``state`` (``state[t] ∪ result[t]`` is the updated table),
+    plus ``chunk_batch``: the embedded chunk rows both chunk tables are
+    allocated from. Both chunk tables re-run its lineage (parse, chunk,
+    embed) unless the caller persists it while it writes them.
 
     ``tokenizer``: ``"words"`` budgets chunks by whitespace words (the
     deterministic stand-in); ``"bpe"`` budgets by REAL learned BPE token
@@ -73,10 +78,11 @@ def import_documents(
     docs = kept.join(F.broadcast(sidecars), "filepath", "left")
 
     # U1: model dimension
-    incoming_model = spark.createDataFrame(
-        [(model_name, EMBEDDING_DIM)], "name string, embedding_dim int"
+    incoming_model = local_frame(
+        spark, [(model_name, EMBEDDING_DIM)], "name string, embedding_dim int"
     )
-    models = write.upsert_models(state["models"], incoming_model)
+    new_models = write.upsert_allocated(state["models"], incoming_model, keys=["name"])
+    models = state["models"].unionByName(new_models)
     model_id = F.broadcast(
         models.filter(F.col("name") == model_name).select(
             F.col("id").alias("model_id")
@@ -99,7 +105,10 @@ def import_documents(
             "model_id",
         )
     )
-    sources = write.upsert_sources(state["sources"], src_batch)
+    new_sources = write.upsert_allocated(
+        state["sources"], src_batch, keys=list(write.SOURCE_UNIQUE_KEYS)
+    )
+    sources = state["sources"].unionByName(new_sources)
 
     # resolve each doc's source_id through the upserted dimension
     doc_sources = docs.crossJoin(model_id).withColumn(
@@ -167,23 +176,20 @@ def import_documents(
     new_chunks, new_chunk_data = write.append_chunks(
         state["chunks"], batch, order_by=("source_id", "doc_id", "chunk_number")
     )
-    # metadata contract: chunk_data.metadata is map<string,string>
-    new_chunk_data = new_chunk_data.withColumn(
-        "metadata", F.from_json("metadata", "map<string,string>")
-    )
-    chunk_data = state["chunk_data"].select("chunk_id", "metadata", "chunk_text").unionByName(
-        new_chunk_data
-    ).withColumn("id", F.col("chunk_id")).select("id", "chunk_id", "metadata", "chunk_text")
-    all_chunks = state["chunks"].unionByName(
-        new_chunks.withColumn(
-            "embedding", F.col("embedding").cast("array<float>")
-        )
-    )
     return {
-        "models": models,
-        "sources": sources,
-        "chunks": all_chunks,
-        "chunk_data": chunk_data,
+        "models": new_models,
+        "sources": new_sources,
+        "chunks": new_chunks.withColumn(
+            "embedding", F.col("embedding").cast("array<float>")
+        ),
+        # metadata contract: chunk_data.metadata is map<string,string>
+        "chunk_data": new_chunk_data.select(
+            F.col("chunk_id").alias("id"),
+            "chunk_id",
+            F.from_json("metadata", "map<string,string>").alias("metadata"),
+            "chunk_text",
+        ),
+        "chunk_batch": batch,
     }
 
 

@@ -10,8 +10,10 @@ partition count that AQE can coalesce downward.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_session(app_name: str = "demo_pgvector_spark", cpus: int | None = None) -> SparkSession:
@@ -110,6 +112,27 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # conf locked down — proceed with session defaults
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-side table (tuples in ``schema``'s column order) as
+    a ``LocalRelation``: the rows travel inside the plan as Arrow data,
+    so scanning it starts no job and no Python worker, and an empty one
+    is pruned by the optimizer. ``spark.createDataFrame`` of a Python
+    list instead parallelizes it into a Python RDD, which every action
+    that reads the frame re-runs through one Python task per slice."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class scoped_conf:

@@ -30,9 +30,11 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Sequence
 
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 
 from demo_pgvector_spark.operators import write as write_ops
+from demo_pgvector_spark.session import local_frame
 
 _POINTER = "_CURRENT"
 
@@ -52,7 +54,7 @@ def read_table(spark: SparkSession, root: str, schema_ddl: str) -> DataFrame:
     before the first commit)."""
     v = current_version(root)
     if v is None:
-        return spark.createDataFrame([], schema_ddl)
+        return local_frame(spark, [], schema_ddl)
     return spark.read.parquet(os.path.join(root, v))
 
 
@@ -105,10 +107,16 @@ def commit_table(
         shutil.rmtree(dst, ignore_errors=True)  # orphan from a crash
         os.makedirs(dst)
         prev = os.path.join(root, v)
-        for name in os.listdir(prev):
-            if name.endswith(".parquet"):
-                os.link(os.path.join(prev, name), os.path.join(dst, name))
+        linked = [n for n in os.listdir(prev) if n.endswith(".parquet")]
+        for name in linked:
+            os.link(os.path.join(prev, name), os.path.join(dst, name))
         out.write.mode("append").parquet(dst)
+        # an empty delta still writes one schema-only file: drop it, so a
+        # no-op commit (a re-import that adds no model) adds no file
+        for name in set(os.listdir(dst)) - set(linked):
+            path = os.path.join(dst, name)
+            if name.endswith(".parquet") and papq.read_metadata(path).num_rows == 0:
+                os.remove(path)
     else:
         out.write.mode("overwrite").parquet(dst)
     tmp = os.path.join(root, f".{_POINTER}.tmp")

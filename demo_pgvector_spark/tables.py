@@ -99,10 +99,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")
 
 
@@ -132,9 +128,3 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", schema=None
     if fmt == "csv":
         r = r.option("header", "true")
     return r.load(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql queries."""
-    for name in TESTDATA_TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

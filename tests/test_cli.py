@@ -1,6 +1,7 @@
 """The three-command user surface (cli.py) — the reference's
 tasks.py example.load_and_query_1 as separate invocations against a
-persistent warehouse, on the reference's own example corpus.
+persistent warehouse, on the reference's own example corpus (when it
+is present) and on a synthetic one — plus the engine-extension verbs.
 
 Each command call reloads state from disk (load_state), exactly like
 the reference's CLI processes reconnecting to Postgres — nothing is
@@ -18,11 +19,12 @@ from demo_pgvector_spark import cli
 
 EXAMPLES = "/root/reference/examples"
 
-pytestmark = pytest.mark.skipif(
+needs_examples = pytest.mark.skipif(
     not os.path.isdir(EXAMPLES), reason="reference examples not present"
 )
 
 
+@needs_examples
 def test_import_search_generate_roundtrip(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     books = sorted(glob.glob(f"{EXAMPLES}/*.epub"))
@@ -175,15 +177,19 @@ def test_mix_verb_rebalances_domains(spark, tmp_path):
 
 def test_maintain_verb_compacts_and_vacuums(spark, tmp_path):
     """After two imports the warehouse holds multiple versions per
-    table; maintain compacts each to one file and prunes history,
+    table, and the add-file commits have accreted several files per
+    version; maintain compacts each to one file and prunes history,
     leaving query results unchanged."""
     from demo_pgvector_spark import cli
     from demo_pgvector_spark.streaming import ingest
+    from tests.corpus import write_book
 
-    books = sorted(glob.glob(f"{EXAMPLES}/*.epub"))
+    books = [write_book(str(tmp_path / "books"), i) for i in range(3)]
     wh = str(tmp_path / "wh")
     cli.import_doc(spark, wh, books[:1])
-    cli.import_doc(spark, wh, books[1:2])
+    cli.import_doc(spark, wh, books[1:])
+    accreted = glob.glob(f"{wh}/chunks/{ingest.current_version(f'{wh}/chunks')}/*.parquet")
+    assert len(accreted) > 1
     before = {
         n: sorted(tuple(r) for r in df.collect())
         for n, df in cli.load_state(spark, wh).items()

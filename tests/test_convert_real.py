@@ -98,9 +98,9 @@ def test_full_import_and_search_over_real_corpus(spark, converted):
         .withColumn("doc_id", F.xxhash64("filepath"))
         .select("doc_id", "filepath", "text")
     )
-    state = pipeline.import_documents(
-        spark, files, sidecars, pipeline.empty_tables(spark), max_tokens=256
-    )
+    empty = pipeline.empty_tables(spark)
+    novel = pipeline.import_documents(spark, files, sidecars, empty, max_tokens=256)
+    state = {k: empty[k].unionByName(novel[k]) for k in empty}
     n_chunks = state["chunks"].count()
     assert n_chunks > 100  # five books at 256-token chunks
     assert state["chunk_data"].count() == n_chunks
